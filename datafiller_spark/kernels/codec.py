@@ -28,6 +28,15 @@ Layout:
   changed value (high nibble: leading zero BYTES, low nibble:
   meaningful BYTES - 1), meaningful bytes.
 
+Encoding a series' chunks: ``encode_chunks`` takes the whole series
+and its chunk starts and builds every chunk's value block in one
+segmented pass (XORs, byte widths, headers and payload bytes over the
+whole series, each chunk then a few slices of them; tag bits are packed
+with each chunk starting on its own byte). The wire format is the same
+and each chunk's bytes equal ``encode_points`` of that chunk alone. A
+regular grid's timestamp block has all-zero delta-of-deltas, so it is
+the header plus zero tag bytes with no class or payload section.
+
 The property pinned by tests: decode(encode(ts, values)) round-trips
 int64 timestamps and float64 bit patterns exactly (NaN included).
 """
@@ -44,26 +53,25 @@ _U64 = np.uint64
 _DOD_BYTES = np.array([1, 2, 3, 8], dtype=np.int64)
 
 
-def _pack_var_bytes(values: np.ndarray, nbytes: np.ndarray) -> bytes:
-    """Concatenate variable-byte-width big-endian fields.
+def _be_byte_fields(values: np.ndarray, first: np.ndarray, stop: np.ndarray) -> np.ndarray:
+    """Concatenate bytes ``first[i]:stop[i]`` of each value's big-endian
+    8-byte form, in value order, as one uint8 array.
 
-    Every output byte belongs to exactly one field, so each of the ≤8
-    per-field byte positions is a single vectorized masked assignment.
+    Every output byte belongs to exactly one field, so this is a single
+    boolean-mask gather over the ``(n, 8)`` byte view.
     """
+    be = np.asarray(values, dtype=_U64).astype(">u8").view(np.uint8).reshape(-1, 8)
+    col = np.arange(8)
+    return be[(col >= first[:, None]) & (col < stop[:, None])]
+
+
+def _pack_var_bytes(values: np.ndarray, nbytes: np.ndarray) -> bytes:
+    """Concatenate variable-byte-width big-endian fields (the low
+    ``nbytes[i]`` bytes of ``values[i]``)."""
     nbytes = np.asarray(nbytes, dtype=np.int64)
     if len(nbytes) == 0:
         return b""
-    values = np.asarray(values, dtype=_U64)
-    ends = np.cumsum(nbytes)
-    starts = ends - nbytes
-    buf = np.empty(int(ends[-1]), dtype=np.uint8)
-    for k in range(8):
-        active = nbytes > k
-        if not active.any():
-            break
-        shift = ((nbytes[active] - 1 - k) << 3).astype(_U64)
-        buf[starts[active] + k] = ((values[active] >> shift) & _U64(0xFF)).astype(np.uint8)
-    return buf.tobytes()
+    return _be_byte_fields(values, 8 - nbytes, np.full(len(nbytes), 8)).tobytes()
 
 
 def _gather_var_bytes(buf: np.ndarray, starts: np.ndarray, nbytes: np.ndarray) -> np.ndarray:
@@ -113,6 +121,9 @@ def encode_timestamps(ts: np.ndarray) -> bytes:
         return head
     dods = np.diff(deltas)
     nonzero = dods != 0
+    if not nonzero.any():
+        # regular grid: all-zero tags and no class or payload bytes
+        return head + bytes((n - 2 + 7) >> 3)
     tag_bytes = np.packbits(nonzero).tobytes()
     nz = dods[nonzero]
     cls = np.select(
@@ -173,34 +184,54 @@ def decode_timestamps(payload: bytes) -> np.ndarray:
     return out
 
 
-def encode_values(values: np.ndarray) -> bytes:
-    """Gorilla XOR encode float64 values (NaN-safe: bit patterns round-trip)."""
-    bits = np.asarray(values, dtype=np.float64).view(_U64)
-    n = len(bits)
-    head = struct.pack(">I", n)
-    if n == 0:
-        return head
-    head += struct.pack(">Q", int(bits[0]))
-    if n == 1:
-        return head
+def _encode_value_blocks(values: np.ndarray, starts: np.ndarray) -> list[bytes]:
+    """Gorilla XOR value blocks of the non-empty chunks
+    ``values[starts[c]:starts[c + 1]]`` (the last runs to the end), in
+    one segmented pass: the XORs, byte widths, headers and payload bytes
+    of every chunk come from whole-series array operations, and each
+    chunk's block is then a few slices of them. Each block is
+    byte-identical to encoding its chunk alone."""
+    bits = np.ascontiguousarray(values, dtype=np.float64).view(_U64)
+    starts = np.asarray(starts, dtype=np.int64).tolist()
+    ends = starts[1:] + [len(bits)]
+    # XOR i pairs values i and i+1, so chunk [s, e) owns XORs s..e-2;
+    # the one across each cut is computed but no chunk slices it
     xors = bits[1:] ^ bits[:-1]
     changed = xors != 0
-    tag_bytes = np.packbits(changed).tobytes()
     x = xors[changed]
-    if len(x) == 0:
-        return head + tag_bytes
-    # leading/trailing zero BYTE counts straight from the byte view
-    xb = x.view(np.uint8).reshape(len(x), 8)
-    if not np.little_endian:  # pragma: no cover - x86/arm are little-endian
-        xb = xb[:, ::-1]
-    nz = xb != 0  # column 7 = most significant byte (little-endian view)
-    lead_b = np.argmax(nz[:, ::-1], axis=1)  # zero bytes above the top nonzero
-    trail_b = np.argmax(nz, axis=1)  # zero bytes below the bottom nonzero
+    # leading/trailing zero BYTE counts of the nonzero XORs: one
+    # comparison per byte boundary
+    lead_b = np.zeros(len(x), dtype=np.int64)
+    trail_b = np.zeros(len(x), dtype=np.int64)
+    for b in range(1, 8):
+        lead_b += x < (_U64(1) << _U64(64 - 8 * b))
+        trail_b += (x & ((_U64(1) << _U64(8 * b)) - _U64(1))) == 0
     mb = 8 - lead_b - trail_b
     header = ((lead_b << 4) | (mb - 1)).astype(np.uint8).tobytes()
-    meaningful = x >> (trail_b.astype(_U64) << _U64(3))
-    payload = _pack_var_bytes(meaningful, mb)
-    return head + tag_bytes + header + payload
+    payload = _be_byte_fields(x, lead_b, 8 - trail_b).tobytes()
+
+    # chunk [s, e) holds changed XORs x[a:z], a and z being the changes
+    # before XOR s and before XOR e - 1, and their payload bytes p[a]:p[z]
+    n_changed = np.concatenate(([0], np.cumsum(changed)))
+    first = n_changed[starts].tolist()
+    last = n_changed[np.array(ends) - 1].tolist()
+    p_cum = np.concatenate(([0], np.cumsum(mb)))
+    out = []
+    for s, e, a, z in zip(starts, ends, first, last):
+        block = struct.pack(">IQ", e - s, int(bits[s]))
+        if e - s > 1:
+            block += np.packbits(changed[s : e - 1]).tobytes()
+            if z > a:
+                block += header[a:z] + payload[p_cum[a] : p_cum[z]]
+        out.append(block)
+    return out
+
+
+def encode_values(values: np.ndarray) -> bytes:
+    """Gorilla XOR encode float64 values (NaN-safe: bit patterns round-trip)."""
+    if len(values) == 0:
+        return struct.pack(">I", 0)
+    return _encode_value_blocks(values, np.zeros(1, dtype=np.int64))[0]
 
 
 def decode_values(payload: bytes) -> np.ndarray:
@@ -240,6 +271,20 @@ def encode_points(ts: np.ndarray, values: np.ndarray) -> bytes:
     tblock = encode_timestamps(ts)
     vblock = encode_values(values)
     return struct.pack(">I", len(tblock)) + tblock + vblock
+
+
+def encode_chunks(ts: np.ndarray, values: np.ndarray, starts: np.ndarray) -> list[bytes]:
+    """``encode_points`` of every chunk ``[starts[c], starts[c + 1])``
+    of one series (the last chunk runs to the end; chunks non-empty), in
+    one segmented pass over the values. Byte-identical to encoding each
+    chunk on its own."""
+    ts = np.asarray(ts, dtype=np.int64)
+    ends = np.append(starts[1:], len(ts)).tolist()
+    out = []
+    for s, e, vblock in zip(np.asarray(starts).tolist(), ends, _encode_value_blocks(values, starts)):
+        tblock = encode_timestamps(ts[s:e])
+        out.append(struct.pack(">I", len(tblock)) + tblock + vblock)
+    return out
 
 
 def decode_points(payload: bytes) -> tuple[np.ndarray, np.ndarray]:

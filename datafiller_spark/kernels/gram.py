@@ -25,8 +25,13 @@ NumPy rather than Numba loops:
   EXCLUDED columns — a boolean-matrix test here instead of the
   reference's bitmask/lowest-NaN-column index (that indexing is a Numba
   cache optimization; the admission semantics are identical);
-- the ridge solve per pattern runs on the usable-column sub-Gram via
-  :func:`datafiller_spark.kernels.ridge.ridge_from_gram`.
+- each pattern's ridge system is formed on its usable-column sub-Gram
+  (:func:`datafiller_spark.kernels.ridge.ridge_system`), and the
+  systems of all of a target's patterns are stacked by width and solved
+  in one batched ``np.linalg.solve`` call per width. NumPy runs LAPACK
+  ``gesv`` on each matrix of a stack exactly as on a single matrix, so
+  the coefficients are bit-identical to one solve per pattern; only the
+  per-call overhead is shared. The Grams themselves stay per pattern.
 
 Patterns that gather fewer than ``min_samples_train`` rows are NOT
 solved here — the caller falls back to its optimask branch, mirroring
@@ -37,8 +42,8 @@ from __future__ import annotations
 
 import numpy as np
 
-from .optimask import unique_bool_rows
-from .ridge import ridge_from_gram
+from .optimask import group_order, unique_bool_rows
+from .ridge import ridge_intercept, ridge_system
 
 #: cached per-group Gram memory ceiling (reference parity: _gram.py:29)
 GRAM_CACHE_BUDGET_BYTES = 64_000_000
@@ -109,9 +114,14 @@ class GramSolver:
             self._group_masks = patterns[kept]  # (G, k) bool: NaN columns
             self._group_counts = counts[kept]
             self._group_grams = np.zeros((len(kept), width, width), dtype=np.float64)
+            # NaN→0 is exact here: a group only serves patterns that
+            # exclude all its NaN columns. One stable sort by group keeps
+            # each group's rows in ascending order, as a per-group mask
+            # would, so every group Gram is the same product.
+            z0 = np.nan_to_num(z[nan_rows].astype(np.float64), copy=False)
+            order, bounds = group_order(group_of_row, len(kept))
             for g in range(len(kept)):
-                rows = nan_rows[group_of_row == g]
-                zg = np.nan_to_num(z[rows].astype(np.float64), copy=False)
+                zg = z0[order[bounds[g] : bounds[g + 1]]]
                 self._group_grams[g] = zg.T @ zg
             self._loose_rows = nan_rows[~cached]
         else:
@@ -121,38 +131,69 @@ class GramSolver:
             self._loose_rows = np.zeros(0, dtype=np.int64)
         self._loose_masks = self._mask[self._loose_rows]
 
-    def solve_pattern(
+    def solve_patterns(
         self,
-        usable: np.ndarray,
+        usables: list[np.ndarray],
         min_samples_train: int,
         alpha: float,
         fit_intercept: bool,
-    ) -> tuple[np.ndarray, float, int] | None:
-        """Ridge coefficients for one observed-feature pattern.
+    ) -> list[tuple[np.ndarray, float, int] | None]:
+        """Ridge coefficients for each observed-feature pattern.
 
-        Returns ``(coef, intercept, n_samples)`` over the ``usable``
-        feature columns, or None when fewer than ``min_samples_train``
-        training rows are complete on them (caller falls back).
+        Per pattern, ``(coef, intercept, n_samples)`` over its
+        ``usable`` feature columns, or None when it has no usable column
+        or fewer than ``min_samples_train`` training rows are complete
+        on them (caller falls back).
+
+        Each pattern's Gram is ``complete + Σ admitted group Grams (+
+        admitted loose rows)``, with the group sum accumulated in group
+        order exactly as ``group_grams[admitted].sum(axis=0)`` does, so
+        every system is the one a per-pattern assembly would form.
         """
         k = self.k
-        usable_mask = np.zeros(k, dtype=bool)
-        usable_mask[usable] = True
+        n_pat = len(usables)
+        usable_mask = np.zeros((n_pat, k), dtype=bool)
+        for p, usable in enumerate(usables):
+            usable_mask[p, usable] = True
         # admitted ⟺ NaN columns ⊆ excluded ⟺ no NaN in a usable column
-        g_admit = ~(self._group_masks[:, usable_mask].any(axis=1)) if len(self._group_masks) else np.zeros(0, bool)
-        r_admit = ~(self._loose_masks[:, usable_mask].any(axis=1)) if len(self._loose_masks) else np.zeros(0, bool)
-        n = self.n_complete + int(self._group_counts[g_admit].sum()) + int(r_admit.sum())
-        if n < min_samples_train:
-            return None
+        g_admit = ~(self._group_masks[:, None, :] & usable_mask[None]).any(axis=2)  # (G, P)
+        r_admit = ~(self._loose_masks[:, None, :] & usable_mask[None]).any(axis=2)  # (L, P)
+        n = self.n_complete + self._group_counts @ g_admit + r_admit.sum(axis=0)
+        solve = np.flatnonzero(usable_mask.any(axis=1) & (n >= min_samples_train))
+        out: list[tuple[np.ndarray, float, int] | None] = [None] * n_pat
+        if not solve.size:
+            return out
 
-        gram = self._gram_complete.copy()
-        if g_admit.any():
-            gram += self._group_grams[g_admit].sum(axis=0)
-        if r_admit.any():
-            zl = np.nan_to_num(self._z[self._loose_rows[r_admit]].astype(np.float64), copy=False)
-            gram += zl.T @ zl
+        g_admit = g_admit[:, solve]
+        width = k + 2
+        group_sum = np.empty((len(solve), width, width))
+        started = np.zeros(len(solve), dtype=bool)
+        for g in range(len(self._group_grams)):
+            first = g_admit[g] & ~started
+            group_sum[first] = self._group_grams[g]
+            group_sum[g_admit[g] & started] += self._group_grams[g]
+            started |= g_admit[g]
+        grams = np.where(started[:, None, None], self._gram_complete + group_sum, self._gram_complete)
+        for i in np.flatnonzero(r_admit[:, solve].any(axis=0)):
+            rows = self._loose_rows[r_admit[:, solve[i]]]
+            zl = np.nan_to_num(self._z[rows].astype(np.float64), copy=False)
+            grams[i] += zl.T @ zl
 
-        sub = np.concatenate([usable, [k, k + 1]])
-        coef, intercept = ridge_from_gram(
-            gram[np.ix_(sub, sub)], n, alpha=alpha, fit_intercept=fit_intercept
-        )
-        return coef, intercept, n
+        # one batched solve per system width
+        n_usable = usable_mask[solve].sum(axis=1)
+        for w in np.unique(n_usable):
+            batch = np.flatnonzero(n_usable == w)
+            pats = solve[batch]
+            sub = np.concatenate(
+                [np.stack([usables[p] for p in pats]), np.broadcast_to([k, k + 1], (len(pats), 2))],
+                axis=1,
+            )
+            sub_grams = grams[batch[:, None, None], sub[:, :, None], sub[:, None, :]]
+            n_b = n[pats]
+            lhs, rhs = ridge_system(sub_grams, n_b, alpha, fit_intercept)
+            coefs = np.linalg.solve(lhs, rhs)
+            for j, p in enumerate(pats):
+                coef = coefs[j]
+                intercept = ridge_intercept(sub_grams[j], n_b[j], coef, fit_intercept)
+                out[p] = (coef, intercept, int(n_b[j]))
+        return out

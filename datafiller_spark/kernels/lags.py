@@ -55,27 +55,24 @@ def all_nan_columns(matrix: np.ndarray) -> np.ndarray:
     return np.isnan(matrix).all(axis=0)
 
 
-def interpolate_small_gaps(series: pd.Series, n: int) -> pd.Series:
-    """Linearly interpolate NaN runs of length ≤ ``n``; leave longer runs.
+def interpolate_gaps(vals: np.ndarray, n: int) -> np.ndarray:
+    """Array core of :func:`interpolate_small_gaps`: a float64 copy of
+    the 1-D ``vals`` with NaN runs of length ≤ ``n`` linearly
+    interpolated.
 
-    Semantics (and floats) identical to the reference's pandas form
-    ``series.interpolate().where(short_run, series)``: positional linear
-    interpolation (pandas method='linear' ignores the index and, like
-    this, computes through ``np.interp``), leading NaNs preserved,
-    trailing NaNs in short runs take the last observed value. The pandas
-    groupby/transform run-length machinery cost ~5 ms per 5760-bucket
-    series — ~25% of the whole per-series kernel — so runs are labeled
-    with a flag-diff cumsum instead.
+    The pandas groupby/transform run-length machinery cost ~5 ms per
+    5760-bucket series — ~25% of the whole per-series kernel — so runs
+    are labeled with a flag-diff cumsum instead.
     """
     if not isinstance(n, int):
         raise EngineTypeError("n must be an int")
-    vals = series.to_numpy(dtype=np.float64, copy=True)
+    vals = np.array(vals, dtype=np.float64)
     missing = np.isnan(vals)
     if not missing.any():
-        return series.copy()
+        return vals
     obs = np.flatnonzero(~missing)
     if not obs.size:
-        return series.copy()
+        return vals
 
     nan_pos = np.flatnonzero(missing)
     vals[nan_pos] = np.interp(nan_pos, obs, vals[obs])
@@ -89,4 +86,23 @@ def interpolate_small_gaps(series: pd.Series, n: int) -> pd.Series:
     run_id = np.cumsum(change) - 1
     run_len = np.bincount(run_id)
     vals[missing & (run_len[run_id] > n)] = np.nan
-    return pd.Series(vals, index=series.index, name=series.name)
+    return vals
+
+
+def interpolate_small_gaps(series: pd.Series, n: int) -> pd.Series:
+    """Linearly interpolate NaN runs of length ≤ ``n``; leave longer runs.
+
+    Semantics (and floats) identical to the reference's pandas form
+    ``series.interpolate().where(short_run, series)``: positional linear
+    interpolation (pandas method='linear' ignores the index and, like
+    this, computes through ``np.interp``), leading NaNs preserved,
+    trailing NaNs in short runs take the last observed value. A series
+    with no NaN, or nothing observed, comes back as an unchanged copy.
+    """
+    if not isinstance(n, int):
+        raise EngineTypeError("n must be an int")
+    vals = series.to_numpy(dtype=np.float64)
+    missing = np.isnan(vals)
+    if not missing.any() or missing.all():
+        return series.copy()
+    return pd.Series(interpolate_gaps(vals, n), index=series.index, name=series.name)

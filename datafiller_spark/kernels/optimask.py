@@ -172,12 +172,25 @@ def optimask(
     return rows_keep, cols_keep
 
 
+def group_order(labels: np.ndarray, n_groups: int) -> tuple[np.ndarray, np.ndarray]:
+    """Row positions sorted by group label, ascending within each group,
+    and the ``n_groups + 1`` bounds of each group's run in that order
+    (labels below 0 sort first and belong to no group). Labels that fit
+    16 bits are sorted by NumPy's stable radix sort."""
+    if n_groups < (1 << 15):
+        labels = labels.astype(np.int16)
+    order = np.argsort(labels, kind="stable")
+    return order, np.searchsorted(labels[order], np.arange(n_groups + 1))
+
+
 def unique_bool_rows(mat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """np.unique(mat, axis=0, return_inverse=True) for boolean matrices,
     via 64-bit packing (the reference's own single-word shortcut,
     _gram.py:199-206, generalized to any width): uniquing packed
     integers is ~10x faster than the void-view lexicographic row sort.
-    Widths past 64 pack into ceil(k/64) words and unique a structured
+    Up to 52 columns a row packs into one exact float64 word via a BLAS
+    matrix-vector product, and up to 16 the unique pass is a counting
+    sort. Wider rows pack into ceil(k/64) words and unique a structured
     view — the sort then compares 8·w-byte keys instead of k-byte bool
     rows (a 425-wide lag-matrix mask sorts 7 words, not 425 bytes; this
     was 44% of the published blocks-benchmark wall). Pattern ORDER
@@ -189,11 +202,18 @@ def unique_bool_rows(mat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     m, k = mat.shape
     if k == 0 or m == 0:
         return np.unique(mat, axis=0, return_inverse=True)
-    if k <= 64:
-        weights = np.uint64(1) << np.arange(k, dtype=np.uint64)
-        packed = (mat.astype(np.uint64) * weights).sum(axis=1, dtype=np.uint64)
-        uniq, inverse = np.unique(packed, return_inverse=True)
-        patterns = ((uniq[:, None] >> np.arange(k, dtype=np.uint64)) & np.uint64(1)).astype(bool)
+    if k <= 52:
+        # bit j of row i's word = mat[i, j]; the matrix-vector product
+        # of distinct powers of two is exact in float64 below 2^53
+        packed = (mat.astype(np.float64) @ np.ldexp(1.0, np.arange(k))).astype(np.int64)
+        if k <= 16:
+            # counting-sort unique over the 2^k possible words
+            present = np.bincount(packed, minlength=1 << k) > 0
+            uniq = np.flatnonzero(present)
+            inverse = (np.cumsum(present) - 1)[packed]
+        else:
+            uniq, inverse = np.unique(packed, return_inverse=True)
+        patterns = ((uniq[:, None] >> np.arange(k)) & 1).astype(bool)
         return patterns, inverse
     w = (k + 63) // 64
     padded = np.zeros((m, w * 64), dtype=bool)

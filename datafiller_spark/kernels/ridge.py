@@ -14,28 +14,50 @@ from __future__ import annotations
 import numpy as np
 
 
-def ridge_from_gram(
-    gram: np.ndarray, n_samples: int, alpha: float, fit_intercept: bool
-) -> tuple[np.ndarray, float]:
-    """Solve ridge from the Gram of the augmented matrix ``[X, y, 1]``.
+def ridge_system(
+    gram: np.ndarray, n_samples, alpha: float, fit_intercept: bool
+) -> tuple[np.ndarray, np.ndarray]:
+    """Normal equations ``(lhs, rhs)`` of ridge from the Gram of the
+    augmented matrix ``[X, y, 1]``: mean-centered when fitting an
+    intercept, ``alpha`` added to the diagonal after centering.
+
+    ``gram`` may be a stack ``(..., k + 2, k + 2)`` with one
+    ``n_samples`` per system; every system is formed with the same
+    element-wise operations as a single one.
 
     Reference parity: src/datafiller/estimators/ridge.py:4-39.
     """
-    k = gram.shape[0] - 2
-    sxx = gram[:k, :k]
-    sxy = gram[:k, k]
+    k = gram.shape[-1] - 2
+    n_samples = np.asarray(n_samples)[..., None]
+    sxx = gram[..., :k, :k]
+    sxy = gram[..., :k, k]
     if fit_intercept:
-        sx = gram[:k, k + 1]
-        sy = gram[k, k + 1]
-        lhs = sxx - np.outer(sx, sx) / n_samples
+        sx = gram[..., :k, k + 1]
+        sy = gram[..., k, k + 1, None]
+        lhs = sxx - sx[..., :, None] * sx[..., None, :] / n_samples[..., None]
         rhs = sxy - sx * (sy / n_samples)
     else:
         lhs = sxx.copy()
         rhs = sxy
-    lhs.flat[:: k + 1] += alpha
-    coef = np.linalg.solve(lhs, rhs)
-    intercept = float(sy / n_samples - (sx / n_samples) @ coef) if fit_intercept else 0.0
-    return coef, intercept
+    diag = np.arange(k)
+    lhs[..., diag, diag] += alpha
+    return lhs, rhs
+
+
+def ridge_intercept(gram: np.ndarray, n_samples: int, coef: np.ndarray, fit_intercept: bool) -> float:
+    """Intercept of the ridge solution ``coef`` of :func:`ridge_system`."""
+    if not fit_intercept:
+        return 0.0
+    k = gram.shape[0] - 2
+    return float(gram[k, k + 1] / n_samples - (gram[:k, k + 1] / n_samples) @ coef)
+
+
+def ridge_from_gram(
+    gram: np.ndarray, n_samples: int, alpha: float, fit_intercept: bool
+) -> tuple[np.ndarray, float]:
+    """Solve ridge from the Gram of the augmented matrix ``[X, y, 1]``."""
+    coef = np.linalg.solve(*ridge_system(gram, n_samples, alpha, fit_intercept))
+    return coef, ridge_intercept(gram, n_samples, coef, fit_intercept)
 
 
 class FastRidge:

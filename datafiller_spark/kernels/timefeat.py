@@ -24,21 +24,25 @@ TIME_FEATURE_BASENAMES = (
 )
 
 
-def make_time_features(
-    index: pd.DatetimeIndex, reserved_names: Iterable[str] = ()
-) -> pd.DataFrame:
-    # int64-nanosecond arithmetic instead of six DatetimeIndex accessor
-    # calls (each allocates through pandas machinery — a fixed ~1 ms per
-    # per-series kernel call). Values are bit-identical: hour/minute/
-    # day-of-week are exact small integers either way, and the trend is
-    # the same float64 division rounded once to float32.
-    ns = index.asi8
-    elapsed64 = (ns - ns[0]) / 86_400_000_000_000.0  # days, float64
-    elapsed = elapsed64.astype(np.float32)
-    if elapsed.size and elapsed[-1] != 0:
-        trend = elapsed / elapsed[-1]
+def time_feature_values(ns: np.ndarray) -> np.ndarray:
+    """The five calendar features of an epoch-nanosecond grid as one
+    ``(len(ns), 5)`` float32 array, columns in ``TIME_FEATURE_BASENAMES``
+    order — the array core behind :func:`make_time_features`.
+
+    int64-nanosecond arithmetic instead of six DatetimeIndex accessor
+    calls (each allocates through pandas machinery — a fixed ~1 ms per
+    per-series kernel call). Values are bit-identical: hour/minute/
+    day-of-week are exact small integers either way, and the trend is
+    the same float64 division rounded once to float32."""
+    ns = np.asarray(ns, dtype=np.int64)
+    out = np.empty((len(ns), len(TIME_FEATURE_BASENAMES)), dtype=np.float32)
+    if not len(ns):
+        return out
+    elapsed = ((ns - ns[0]) / 86_400_000_000_000.0).astype(np.float32)  # days
+    if elapsed[-1] != 0:
+        out[:, 0] = elapsed / elapsed[-1]
     else:
-        trend = np.zeros(len(index), dtype=np.float32)
+        out[:, 0] = 0.0
 
     day_s = ns // 1_000_000_000 % 86_400
     hour = (day_s // 3600).astype(np.float32) + (day_s // 60 % 60).astype(np.float32) / 60.0
@@ -46,22 +50,35 @@ def make_time_features(
     dow = ((ns // 86_400_000_000_000 + 3) % 7).astype(np.float32)
     day_angle = np.float32(2.0 * np.pi) * hour / np.float32(24.0)
     week_angle = np.float32(2.0 * np.pi) * dow / np.float32(7.0)
+    out[:, 1] = np.sin(day_angle)
+    out[:, 2] = np.cos(day_angle)
+    out[:, 3] = np.sin(week_angle)
+    out[:, 4] = np.cos(week_angle)
+    return out
 
-    raw = {
-        TIME_FEATURE_BASENAMES[0]: trend.astype(np.float32, copy=False),
-        TIME_FEATURE_BASENAMES[1]: np.sin(day_angle).astype(np.float32, copy=False),
-        TIME_FEATURE_BASENAMES[2]: np.cos(day_angle).astype(np.float32, copy=False),
-        TIME_FEATURE_BASENAMES[3]: np.sin(week_angle).astype(np.float32, copy=False),
-        TIME_FEATURE_BASENAMES[4]: np.cos(week_angle).astype(np.float32, copy=False),
-    }
+
+def time_feature_names(reserved_names: Iterable[str] = ()) -> list[str]:
+    """Feature names for :func:`time_feature_values`' columns; a name
+    already in ``reserved_names`` gets a ``_1``, ``_2``… suffix."""
     taken = set(reserved_names)
-    out = {}
-    for base, vals in raw.items():
+    names = []
+    for base in TIME_FEATURE_BASENAMES:
         name = base
         k = 1
         while name in taken:
             name = f"{base}_{k}"
             k += 1
         taken.add(name)
-        out[name] = vals
-    return pd.DataFrame(out, index=index)
+        names.append(name)
+    return names
+
+
+def make_time_features(
+    index: pd.DatetimeIndex, reserved_names: Iterable[str] = ()
+) -> pd.DataFrame:
+    """:func:`time_feature_values` of ``index`` as a named frame."""
+    return pd.DataFrame(
+        time_feature_values(index.asi8),
+        index=index,
+        columns=time_feature_names(reserved_names),
+    )

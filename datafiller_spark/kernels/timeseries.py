@@ -1,7 +1,7 @@
-"""Time-series imputation driver (numeric pandas frames).
+"""Time-series imputation driver.
 
-Pure NumPy/pandas re-expression of the reference's numeric path
-(reference: src/datafiller/timeseries/imputer.py:435-631):
+Pure NumPy re-expression of the reference's numeric path (reference:
+src/datafiller/timeseries/imputer.py:435-631):
 
 1. regularize the DatetimeIndex to its full grid (frequency from
    ``index.freq`` → ``pd.infer_freq`` → min positive delta with an
@@ -14,21 +14,28 @@ Pure NumPy/pandas re-expression of the reference's numeric path
    ``before``/``after`` time predicates;
 6. project back to the original column layout.
 
-This kernel is what runs per (series-group) inside the engine's
-``applyInPandas`` gap-fill operator.
+Steps 2–6 are one array core, :func:`fill_array`: it takes the grid as
+epoch-nanosecond int64s plus a ``(rows, columns)`` value matrix and
+builds no ``DatetimeIndex``, DataFrame or Series. Everything numeric
+calls it — ``TimeSeriesImputer.__call__`` (after step 1 and resolving
+its frame-level selectors) and the fused Spark gap-fill operators
+(operators/impute.py), which build their grid straight from the tier
+step — so there is one fill path. Only mixed numeric/categorical frames
+take the pandas path (``_impute_mixed``), because their one-hot codec
+works on frames.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+from collections.abc import Iterable, Sequence
 
 import numpy as np
 import pandas as pd
 
 from ..exceptions import EngineTypeError, EngineValueError
-from .lags import all_nan_columns, build_lag_matrix, interpolate_small_gaps
+from .lags import all_nan_columns, build_lag_matrix, interpolate_gaps, interpolate_small_gaps
 from .multivariate import MultivariateImputer
-from .timefeat import make_time_features
+from .timefeat import make_time_features, time_feature_names, time_feature_values
 
 
 def infer_frequency(index: pd.DatetimeIndex):
@@ -80,6 +87,107 @@ def regularize_index(df: pd.DataFrame) -> pd.DataFrame:
     if len(full) == len(df.index) and full.equals(df.index):
         return df
     return df.reindex(full)
+
+
+def _interpolate_columns(values: np.ndarray, n: int | None) -> tuple[np.ndarray, int]:
+    """Small-gap interpolation of every column that has both NaN and
+    observed cells; returns ``(values, cells filled)``. Interpolated
+    columns are float64, so the matrix is upcast to float64 when any
+    column changes and is returned as is otherwise — the dtype the
+    per-column pandas form gave."""
+    if n is None:
+        return values, 0
+    if not isinstance(n, int):
+        raise EngineTypeError("n must be an int")
+    missing = np.isnan(values)
+    todo = np.flatnonzero(missing.any(axis=0) & ~missing.all(axis=0))
+    if not todo.size:
+        return values, 0
+    out = values.astype(np.float64)
+    for j in todo:
+        out[:, j] = interpolate_gaps(out[:, j], n)
+    return out, int(missing.sum() - np.isnan(out).sum())
+
+
+def feature_matrix(
+    values: np.ndarray, ns: np.ndarray, lags: Sequence[int], add_time_features: bool
+) -> tuple[np.ndarray, np.ndarray]:
+    """``[X | X shifted per lag | calendar]`` over a regular grid, with
+    generated features that have no observed value dropped (originals
+    always kept). Returns ``(matrix, kept)``: ``kept`` holds the
+    positions of the matrix's columns in the full layout."""
+    n_original = values.shape[1]
+    if add_time_features:
+        time_values = time_feature_values(ns)
+    else:
+        time_values = np.empty((len(values), 0), dtype=values.dtype)
+    matrix = build_lag_matrix(values, np.asarray(lags, dtype=np.int64), time_values)
+    keep = ~all_nan_columns(matrix)
+    keep[:n_original] = True
+    if not keep.all():
+        matrix = np.ascontiguousarray(matrix[:, keep])
+    return matrix, np.flatnonzero(keep)
+
+
+def fill_array(
+    values: np.ndarray,
+    ns: np.ndarray,
+    imputer: MultivariateImputer,
+    lags: Sequence[int],
+    interpolate_gaps_less_than: int | None = None,
+    add_time_features: bool = True,
+    rows_to_impute=None,
+    cols_to_impute=None,
+    n_nearest_features: None | float | int = None,
+) -> tuple[np.ndarray, dict[str, int], np.ndarray]:
+    """Gap-fill a numeric matrix on a complete regular grid.
+
+    ``values`` is ``(rows, columns)`` with NaN for missing cells, and
+    ``ns`` the grid's epoch-nanosecond timestamps, one per row.
+    ``cols_to_impute`` and ``rows_to_impute`` are integer positions.
+    Returns ``(filled, fill_counts, kept)``: the filled original
+    columns, the cells filled per policy step (``interp``, ``model``,
+    ``fallback``), and the full-layout positions of the features the
+    imputer saw (for naming ``imputer.imputation_features_``).
+    """
+    values, n_interp = _interpolate_columns(values, interpolate_gaps_less_than)
+    n_original = values.shape[1]
+    if (
+        rows_to_impute is None
+        and cols_to_impute is None
+        and n_nearest_features is None
+        and np.isfinite(values).all()
+    ):
+        # nothing left to impute: the imputer would return its input
+        imputer.imputation_features_ = None
+        imputer.fill_counts_ = {"model": 0, "fallback": 0}
+        return values, {"interp": n_interp, "model": 0, "fallback": 0}, np.arange(n_original)
+    matrix, kept = feature_matrix(values, ns, lags, add_time_features)
+    imputed = imputer(
+        matrix,
+        rows_to_impute=rows_to_impute,
+        cols_to_impute=np.arange(n_original) if cols_to_impute is None else cols_to_impute,
+        n_nearest_features=n_nearest_features,
+        # `matrix` was built above and is never read again
+        _owns_input=True,
+    )
+    return imputed[:, :n_original], {"interp": n_interp, **imputer.fill_counts_}, kept
+
+
+def _numeric_values(df: pd.DataFrame) -> np.ndarray:
+    """The frame's values as a float matrix (nullable extension dtypes
+    reach ``to_numpy`` as object arrays holding pd.NA, which plain
+    astype rejects; pandas' own cast maps NA → NaN)."""
+    values = df.to_numpy()
+    if np.issubdtype(values.dtype, np.floating):
+        return values
+    try:
+        return values.astype(np.float64)
+    except (TypeError, ValueError):
+        try:
+            return df.astype("float64").to_numpy()
+        except (TypeError, ValueError) as exc:
+            raise EngineValueError("TimeSeriesImputer requires numeric columns.") from exc
 
 
 class TimeSeriesImputer:
@@ -251,59 +359,22 @@ class TimeSeriesImputer:
         self.__init__(**current)
         return self
 
-    def _build_feature_matrix(
-        self, df: pd.DataFrame
-    ) -> tuple[np.ndarray, list, np.ndarray]:
-        """Numeric-path feature matrix: original columns, lag/lead
-        copies, calendar features; generated features with no observed
-        value dropped (originals always kept so the output layout
-        matches the input). Returns ``(matrix, feature_names,
-        orig_of_feature)`` where ``orig_of_feature[p]`` is the ORIGINAL
-        column position feature ``p`` derives from (−1 for
-        index-derived time features) — the mapping ``select_features``
-        uses to turn selected lag-matrix features back into panel
-        columns."""
-        original_cols = df.columns
+    def _feature_layout(self, original_cols) -> tuple[list, np.ndarray]:
+        """Names of the full ``[X | lags | calendar]`` layout that
+        :func:`feature_matrix` builds, and per feature the ORIGINAL
+        column position it derives from (−1 for index-derived time
+        features) — the mapping ``select_features`` uses to turn
+        selected lag-matrix features back into panel columns."""
         n_original = len(original_cols)
-
-        values = df.to_numpy()
-        if not np.issubdtype(values.dtype, np.floating):
-            try:
-                values = values.astype(np.float64)
-            except (TypeError, ValueError):
-                # nullable extension dtypes (Float64/Int64) reach here as
-                # object arrays holding pd.NA, which plain astype rejects;
-                # pandas' own cast maps NA → NaN
-                try:
-                    values = df.astype("float64").to_numpy()
-                except (TypeError, ValueError) as exc:
-                    raise EngineValueError(
-                        "TimeSeriesImputer requires numeric columns."
-                    ) from exc
-
-        feature_names = list(original_cols)
-        orig_of = list(range(n_original))
+        names = list(original_cols)
         for lag in self.lags:
-            feature_names.extend(f"{col}_lag_{lag}" for col in original_cols)
-            orig_of.extend(range(n_original))
+            names.extend(f"{col}_lag_{lag}" for col in original_cols)
+        orig_of = list(range(n_original)) * (1 + len(self.lags))
         if self.add_time_features:
-            time_df = make_time_features(df.index, reserved_names=feature_names)
-            feature_names.extend(time_df.columns)
-            orig_of.extend([-1] * time_df.shape[1])
-            time_values = time_df.to_numpy(dtype=values.dtype)
-        else:
-            time_values = np.empty((len(df), 0), dtype=values.dtype)
-
-        matrix = build_lag_matrix(values, np.asarray(self.lags, dtype=np.int64), time_values)
-
-        keep = ~all_nan_columns(matrix)
-        keep[:n_original] = True
-        orig_of = np.asarray(orig_of, dtype=np.int64)
-        if not keep.all():
-            matrix = np.ascontiguousarray(matrix[:, keep])
-            feature_names = [nm for nm, k in zip(feature_names, keep) if k]
-            orig_of = orig_of[keep]
-        return matrix, feature_names, orig_of
+            time_names = time_feature_names(reserved_names=names)
+            names.extend(time_names)
+            orig_of.extend([-1] * len(time_names))
+        return names, np.asarray(orig_of, dtype=np.int64)
 
     def select_features(
         self,
@@ -342,14 +413,11 @@ class TimeSeriesImputer:
                 "feature layout)."
             )
 
-        if self.interpolate_gaps_less_than is not None:
-            # mirrors __call__: interpolation changes the NaN masks the
-            # scores are computed from
-            df = df.copy()
-            for col in df.columns:
-                df[col] = interpolate_small_gaps(df[col], self.interpolate_gaps_less_than)
-
-        matrix, _, orig_of = self._build_feature_matrix(df)
+        # mirrors __call__: interpolation changes the NaN masks the
+        # scores are computed from
+        values, _ = _interpolate_columns(_numeric_values(df), self.interpolate_gaps_less_than)
+        matrix, kept = feature_matrix(values, df.index.asi8, self.lags, self.add_time_features)
+        orig_of = self._feature_layout(df.columns)[1][kept]
 
         if cols_to_impute is None:
             cols_idx = np.arange(len(df.columns))
@@ -392,35 +460,34 @@ class TimeSeriesImputer:
         numeric_cols = [
             c for c in df.columns if is_numeric_dtype(df[c]) and not is_bool_dtype(df[c])
         ]
-        mixed = len(numeric_cols) < len(df.columns)
-
-        n_interp = 0
-        if self.interpolate_gaps_less_than is not None:
-            df = df.copy()
-            for col in numeric_cols:
-                series = df[col]
-                filled = interpolate_small_gaps(series, self.interpolate_gaps_less_than)
-                # NaN bookkeeping on the raw arrays: the frame-level
-                # isna().sum().sum() double-selection cost more than the
-                # interpolation itself on per-series kernels
-                n_interp += int(
-                    np.isnan(series.to_numpy(dtype=np.float64, copy=False)).sum()
-                    - np.isnan(filled.to_numpy()).sum()
-                )
-                df[col] = filled
-
-        if mixed:
+        if len(numeric_cols) < len(df.columns):
+            n_interp = 0
+            if self.interpolate_gaps_less_than is not None:
+                df = df.copy()
+                for col in numeric_cols:
+                    series = df[col]
+                    filled = interpolate_small_gaps(series, self.interpolate_gaps_less_than)
+                    n_interp += int(
+                        np.isnan(series.to_numpy(dtype=np.float64, copy=False)).sum()
+                        - np.isnan(filled.to_numpy()).sum()
+                    )
+                    df[col] = filled
             return self._impute_mixed(
                 df, rows_to_impute, cols_to_impute, n_nearest_features, before, after, n_interp
             )
 
         original_cols = df.columns
-        n_original = len(original_cols)
-        matrix, feature_names, _ = self._build_feature_matrix(df)
-        feature_index = pd.Index(feature_names)
+        feature_names, _ = self._feature_layout(original_cols)
+        names = pd.Index(feature_names)
+        if not names.is_unique:
+            duplicated = names[names.duplicated()].unique().tolist()
+            raise EngineValueError(
+                f"Column names collide with generated lag feature names: {duplicated}. "
+                "Rename the offending columns before imputation."
+            )
 
         if cols_to_impute is None:
-            cols_idx = np.arange(n_original)
+            cols_idx = None
         else:
             if isinstance(cols_to_impute, (int, str)):
                 cols_to_impute = [cols_to_impute]
@@ -447,22 +514,22 @@ class TimeSeriesImputer:
                 mask &= df.index > pd.to_datetime(str(after))
             rows_to_impute = np.where(mask)[0]
 
-        imputed = self.multivariate_imputer(
-            matrix,
+        filled, self.fill_counts_, kept = fill_array(
+            _numeric_values(df),
+            df.index.asi8,
+            self.multivariate_imputer,
+            self.lags,
+            interpolate_gaps_less_than=self.interpolate_gaps_less_than,
+            add_time_features=self.add_time_features,
             rows_to_impute=rows_to_impute,
             cols_to_impute=cols_idx,
             n_nearest_features=n_nearest_features,
-            # `matrix` was built above and is never read again
-            _owns_input=True,
         )
         self.imputation_features_ = self.multivariate_imputer.imputation_features_
-        mv_counts = self.multivariate_imputer.fill_counts_
-        self.fill_counts_ = {"interp": n_interp, **mv_counts}
         if self.imputation_features_ is not None:
+            kept_names = [feature_names[p] for p in kept]
             self.imputation_features_ = {
-                feature_index[col]: feature_index[features].tolist()
+                kept_names[col]: [kept_names[f] for f in features]
                 for col, features in self.imputation_features_.items()
             }
-
-        positions = feature_index.get_indexer(original_cols)
-        return pd.DataFrame(imputed[:, positions], index=df.index, columns=original_cols)
+        return pd.DataFrame(filled.copy(), index=df.index, columns=original_cols)

@@ -5,9 +5,22 @@ regularization → small-gap linear interpolation → lag/calendar ridge
 imputation → mean fallback) per series group via ``applyInPandas`` —
 one Arrow batch per key group, NumPy math inside, no per-row Python.
 
+The fused operators (``model_gapfill_encode`` per tier and
+``cascade_gapfill_encode_all`` for the whole tier chain) fill and
+encode in one Python stage. Per series they run on NumPy arrays from
+grid to payload (``_SeriesFill``): the grid is the tier step counted
+from the first observed bucket, the fill is the array core
+``kernels.timeseries.fill_array`` (the same code
+``TimeSeriesImputer.__call__`` runs, so the staged and fused paths
+cannot drift apart), calendar chunks are cut on ``datetime64[D/M/Y]``
+integers, and one segmented codec pass (``kernels.codec.encode_chunks``)
+encodes all of the series' chunks. One ``MultivariateImputer`` serves
+every series of a task. No pandas index, frame or series is built per
+tier.
+
 Determinism at scale: rows are sorted by bucket *inside* the kernel, so
 the result is independent of Spark partitioning and Arrow batch order;
-all order-sensitive float math happens on that sorted frame. This is
+all order-sensitive float math happens on that sorted data. This is
 the property that keeps tiers reproducible when the same job runs at N
 and 4N executors.
 """
@@ -16,13 +29,22 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..exceptions import EngineError
-from ..kernels.timeseries import TimeSeriesImputer
+from ..exceptions import EngineError, EngineValueError
+from ..kernels.codec import encode_chunks
+from ..kernels.multivariate import MultivariateImputer
+from ..kernels.timeseries import TimeSeriesImputer, fill_array
+
+#: grid step (seconds), pandas frequency and calendar-chunk unit
+#: (``datetime64`` code) of each tier
+TIER_STEP_S = {"1m": 60, "1h": 3600, "1d": 86400}
+TIER_FREQ = {"1m": "min", "1h": "h", "1d": "D"}
+_CHUNK_CODE = {"1m": "D", "1h": "M", "1d": "Y"}
 
 
 def model_gapfill(
@@ -37,6 +59,7 @@ def model_gapfill(
     add_time_features: bool = True,
     use_gram: bool | None = None,
     regressor_factory=None,
+    freq: str | None = None,
 ) -> DataFrame:
     """Gap-fill ``value_cols`` per key group with the ridge kernel (or a
     custom regressor built per group by ``regressor_factory`` — e.g. the
@@ -44,8 +67,11 @@ def model_gapfill(
 
     Input rows may be sparse (missing buckets) — the kernel reinserts
     the full regular grid, so the output generally has MORE rows than
-    the input: one per grid bucket. Output schema: key cols + bucket +
-    value cols (double).
+    the input: one per grid bucket. ``freq`` (a pandas frequency such as
+    ``TIER_FREQ[tier]``) fixes the grid step; without it each group's
+    step is inferred from its own buckets, which fails on irregular
+    gaps and widens the step when every gap is a multiple of it. Output
+    schema: key cols + bucket + value cols (double).
     """
     keys = list(key_cols)
     values = list(value_cols)
@@ -67,6 +93,8 @@ def model_gapfill(
             .set_index(bucket_col)
             .astype("float64")
         )
+        if freq is not None:
+            frame = frame.asfreq(freq)
         imputer = TimeSeriesImputer(
             lags=lags_list,
             regressor=regressor_factory() if regressor_factory is not None else None,
@@ -156,33 +184,77 @@ def gapfill_metrics(
     )
 
 
-def _chunk_slices(idx, ts_seconds, period_code):
-    """(chunk_start, start, end) slices of a SORTED DatetimeIndex grouped
-    by calendar period, in one O(n) pass. Day periods are pure int64
-    arithmetic (the hot 1m-tier case: the per-chunk ``period == start``
-    mask scans cost ~4 ms per 5760-bucket series); month/year periods
-    (coarse tiers, few rows) go through ``to_period`` once."""
-    import numpy as np
-    import pandas as pd
+class _SeriesFill:
+    """Fill and encode one series' tier grid, on arrays from grid to
+    payload — the per-series work both fused operators share. One
+    ``MultivariateImputer`` serves every series a task fills."""
 
-    n = len(ts_seconds)
-    if not n:
-        return
-    if period_code == "D":
-        trunc = ts_seconds - ts_seconds % 86400
-        cut = np.flatnonzero(np.diff(trunc)) + 1
-        starts = np.concatenate(([0], cut))
-        ends = np.concatenate((cut, [n]))
-        for s, e in zip(starts, ends):
-            yield pd.Timestamp(int(trunc[s]), unit="s"), int(s), int(e)
-    else:
-        period = idx.to_period(period_code).start_time
-        tr = period.view("int64")
-        cut = np.flatnonzero(np.diff(tr)) + 1
-        starts = np.concatenate(([0], cut))
-        ends = np.concatenate((cut, [n]))
-        for s, e in zip(starts, ends):
-            yield period[s], int(s), int(e)
+    def __init__(self, lags, min_samples_train, interpolate_gaps_less_than, use_gram):
+        self.lags = [int(x) for x in lags]
+        self.interpolate_gaps_less_than = interpolate_gaps_less_than
+        self.imputer = MultivariateImputer(min_samples_train=min_samples_train, use_gram=use_gram)
+
+    def __call__(self, tier: str, t_sec: np.ndarray, values: np.ndarray):
+        """``t_sec``: the series' observed bucket starts (epoch seconds,
+        sorted, on the tier grid); ``values``: their float64 values.
+        Returns ``(chunk_start, n_points, payloads)`` per calendar chunk
+        of the filled grid from the first to the last observed bucket."""
+        step = TIER_STEP_S[tier]
+        pos = (t_sec - t_sec[0]) // step
+        grid = np.full((int(pos[-1]) + 1, 1), np.nan)
+        grid[pos, 0] = values
+        ts = t_sec[0] + step * np.arange(len(grid), dtype=np.int64)
+        try:
+            filled = fill_array(
+                grid,
+                ts * 1_000_000_000,
+                self.imputer,
+                self.lags,
+                interpolate_gaps_less_than=self.interpolate_gaps_less_than,
+            )[0][:, 0]
+        except EngineError:
+            # the engine's own validation errors leave the series
+            # unfilled rather than failing the stage; anything else is a
+            # genuine kernel bug and must propagate
+            filled = grid[:, 0]
+        # calendar chunks: cut where the datetime64 day/month/year changes
+        period = ts.astype("datetime64[s]").astype(f"datetime64[{_CHUNK_CODE[tier]}]")
+        starts = np.flatnonzero(np.concatenate(([True], period[1:] != period[:-1])))
+        n_points = np.diff(np.append(starts, len(ts)))
+        return period[starts].astype("datetime64[ns]"), n_points, encode_chunks(ts, filled, starts)
+
+
+class _ChunkRows:
+    """Column lists of the fused operators' chunk rows."""
+
+    def __init__(self, keys: list[str]):
+        self.keys = keys
+        self.cols: dict[str, list] = {
+            c: [] for c in (*keys, "chunk_start", "tier", "n_points", "payload")
+        }
+
+    def add(self, key_values: tuple, tier: str, chunk_start, n_points, payloads) -> None:
+        n = len(payloads)
+        for k, v in zip(self.keys, key_values):
+            self.cols[k].extend([v] * n)
+        self.cols["chunk_start"].extend(chunk_start)
+        self.cols["tier"].extend([tier] * n)
+        self.cols["n_points"].extend(n_points.tolist())
+        self.cols["payload"].extend(payloads)
+
+    def frame(self) -> pd.DataFrame:
+        return pd.DataFrame(self.cols)
+
+
+def _chunk_schema(df: DataFrame, keys: list[str]) -> StructType:
+    out_schema = StructType()
+    for k in keys:
+        out_schema.add(df.schema[k])
+    out_schema.add("chunk_start", "timestamp")
+    out_schema.add("tier", "string")
+    out_schema.add("n_points", "integer")
+    out_schema.add("payload", "binary")
+    return out_schema
 
 
 def model_gapfill_encode(
@@ -197,60 +269,33 @@ def model_gapfill_encode(
     use_gram: bool | None = None,
 ) -> DataFrame:
     """Fused gap-fill + Gorilla encode: ONE shuffle and ONE Python stage
-    per tier instead of two. The kernel fills the series, then chunks it
-    by the tier's calendar period and emits one binary payload per chunk
-    — identical output to ``encode_tier(model_gapfill(...))``.
-    """
-    from ..kernels.codec import encode_points
-    import numpy as np
-
+    per tier instead of two. The kernel fills the series on the tier's
+    grid, then chunks it by the tier's calendar period and emits one
+    binary payload per chunk — identical output to
+    ``encode_tier(model_gapfill(..., freq=TIER_FREQ[tier]))``.
+    Buckets must lie on the tier grid (as ``rollup``/``cascade`` emit
+    them)."""
     keys = list(key_cols)
-    chunk_unit = {"1m": "D", "1h": "M", "1d": "Y"}[tier]  # pandas period codes
-
-    out_schema = StructType()
-    for k in keys:
-        out_schema.add(df.schema[k])
-    out_schema.add("chunk_start", "timestamp")
-    out_schema.add("tier", "string")
-    out_schema.add("n_points", "integer")
-    out_schema.add("payload", "binary")
-
-    lags_list = [int(x) for x in lags]
+    step = TIER_STEP_S[tier]
+    fill_args = (lags, min_samples_train, interpolate_gaps_less_than, use_gram)
 
     def fill_encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        key_values = {k: pdf[k].iloc[0] for k in keys}
-        frame = (
-            pdf[[bucket_col, value_col]]
-            .sort_values(bucket_col)
-            .set_index(bucket_col)
-            .astype("float64")
+        pdf = pdf.sort_values(bucket_col)
+        t_sec = pdf[bucket_col].to_numpy().astype("datetime64[s]").astype(np.int64)
+        if np.any(t_sec % step) or np.any(np.diff(t_sec) <= 0):
+            raise EngineValueError(
+                f"model_gapfill_encode: {bucket_col!r} must hold distinct {tier} bucket starts"
+            )
+        rows = _ChunkRows(keys)
+        rows.add(
+            tuple(pdf[k].iloc[0] for k in keys),
+            tier,
+            *_SeriesFill(*fill_args)(tier, t_sec, pdf[value_col].to_numpy(dtype=np.float64)),
         )
-        imputer = TimeSeriesImputer(
-            lags=lags_list,
-            min_samples_train=min_samples_train,
-            interpolate_gaps_less_than=interpolate_gaps_less_than,
-            use_gram=use_gram,
-        )
-        try:
-            filled = imputer(frame)
-        except EngineError:
-            filled = frame
-        idx = filled.index
-        vals = filled[value_col].to_numpy()
-        ts = idx.view("int64") // 10**9
-        rows = []
-        for chunk_start, s, e in _chunk_slices(idx, ts, chunk_unit):
-            payload = encode_points(ts[s:e].astype(np.int64), vals[s:e])
-            row = dict(key_values)
-            row["chunk_start"] = chunk_start
-            row["tier"] = tier
-            row["n_points"] = int(e - s)
-            row["payload"] = payload
-            rows.append(row)
-        return pd.DataFrame(rows, columns=[*keys, "chunk_start", "tier", "n_points", "payload"])
+        return rows.frame()
 
     return df.select(*keys, bucket_col, value_col).groupBy(*keys).applyInPandas(
-        fill_encode_group, schema=out_schema
+        fill_encode_group, schema=_chunk_schema(df, keys)
     )
 
 
@@ -303,24 +348,9 @@ def cascade_gapfill_encode_all(
     carried over, so results are identical to the per-group form
     (pinned by tests/test_impute_spark.py cross-path equality).
     """
-    import numpy as np
-
-    from ..kernels.codec import encode_points
-
     keys = list(key_cols)
-    chunk_code = {"1m": "D", "1h": "M", "1d": "Y"}
-    freq_code = {"1m": "min", "1h": "h", "1d": "D"}
-
-    out_schema = StructType()
-    for k in keys:
-        out_schema.add(df_1m.schema[k])
-    out_schema.add("chunk_start", "timestamp")
-    out_schema.add("tier", "string")
-    out_schema.add("n_points", "integer")
-    out_schema.add("payload", "binary")
-    out_cols = [*keys, "chunk_start", "tier", "n_points", "payload"]
-
-    lags_list = [int(x) for x in lags]
+    out_schema = _chunk_schema(df_1m, keys)
+    fill_args = (lags, min_samples_train, interpolate_gaps_less_than, use_gram)
 
     def _cascade_sums(ts_sec: np.ndarray, npts: np.ndarray, sv: np.ndarray, step: int):
         """Re-aggregate SORTED observed buckets to a coarser step in one
@@ -335,64 +365,24 @@ def cascade_gapfill_encode_all(
             np.add.reduceat(sv, starts),
         )
 
-    def tier_chain_rows(key_values: dict, ts_sec, npts, sv, rows: list) -> None:
-        """Cascade + fill + encode ONE series (sorted arrays); appends
-        chunk rows."""
-
-        step_sec = {"1m": 60, "1h": 3600, "1d": 86400}
-
-        def emit(tier: str, t: np.ndarray, n: np.ndarray, s_: np.ndarray) -> None:
-            avg = s_.astype("float64") / n
-            # the full grid directly from epoch-second arithmetic —
-            # same rows as DatetimeIndex(...).asfreq(...) (UTC tiers are
-            # fixed-width), minus its get_indexer/reindex machinery;
-            # date_range carries freq, so the imputer's regularize pass
-            # short-circuits too
-            step = step_sec[tier]
-            pos = (t - t[0]) // step
-            vals = np.full(int(pos[-1]) + 1, np.nan)
-            vals[pos] = avg
-            index = pd.date_range(
-                pd.Timestamp(int(t[0]), unit="s"), periods=len(vals), freq=freq_code[tier]
-            )
-            frame = pd.DataFrame({"avg_value": vals}, index=index)
-            imputer = TimeSeriesImputer(
-                lags=lags_list,
-                min_samples_train=min_samples_train,
-                interpolate_gaps_less_than=interpolate_gaps_less_than,
-                use_gram=use_gram,
-            )
-            try:
-                filled = imputer(frame)
-            except EngineError:
-                filled = frame
-            idx = filled.index
-            ts = idx.view("int64") // 10**9
-            vals = filled["avg_value"].to_numpy()
-            for chunk_start, s, e in _chunk_slices(idx, ts, chunk_code[tier]):
-                row = dict(key_values)
-                row["chunk_start"] = chunk_start
-                row["tier"] = tier
-                row["n_points"] = int(e - s)
-                row["payload"] = encode_points(ts[s:e].astype(np.int64), vals[s:e])
-                rows.append(row)
-
-        emit("1m", ts_sec, npts, sv)
+    def tier_chain_rows(fill: _SeriesFill, key_values: tuple, ts_sec, npts, sv, rows: _ChunkRows) -> None:
+        """Cascade + fill + encode ONE series (sorted arrays)."""
+        rows.add(key_values, "1m", *fill("1m", ts_sec, sv.astype("float64") / npts))
         t1h, n1h, s1h = _cascade_sums(ts_sec, npts, sv, 3600)
-        emit("1h", t1h, n1h, s1h)
+        rows.add(key_values, "1h", *fill("1h", t1h, s1h.astype("float64") / n1h))
         t1d, n1d, s1d = _cascade_sums(t1h, n1h, s1h, 86400)
-        emit("1d", t1d, n1d, s1d)
+        rows.add(key_values, "1d", *fill("1d", t1d, s1d.astype("float64") / n1d))
 
     from_raw = raw_ts_col is not None
 
-    def emit_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
+    def emit_chunk(fill: _SeriesFill, pdf: pd.DataFrame) -> pd.DataFrame:
         """Run every complete series in ``pdf`` (sorted by keys, time)."""
-        rows: list = []
+        rows = _ChunkRows(keys)
         # group boundaries via key-change scan — no pandas groupby machinery
+        key_arrays = [pdf[k].to_numpy() for k in keys]
         change = np.zeros(len(pdf), dtype=bool)
         change[0] = True
-        for k in keys:
-            kv = pdf[k].to_numpy()
+        for kv in key_arrays:
             change[1:] |= kv[1:] != kv[:-1]
         starts = np.flatnonzero(change)
         ends = np.append(starts[1:], len(pdf))
@@ -409,23 +399,22 @@ def cascade_gapfill_encode_all(
                 # int32 and silently WRAP on >2^31 per-bucket sums
                 vraw = vraw.astype(np.int64)
             for s, e in zip(starts, ends):
-                key_values = {k: pdf[k].iloc[s] for k in keys}
                 t = trunc[s:e]
                 bstarts = np.concatenate(([0], np.flatnonzero(np.diff(t)) + 1))
-                ts_sec = t[bstarts]
                 npts = np.diff(np.append(bstarts, e - s))
                 sv = np.add.reduceat(vraw[s:e], bstarts)
-                tier_chain_rows(key_values, ts_sec, npts, sv, rows)
-            return pd.DataFrame(rows, columns=out_cols)
+                tier_chain_rows(fill, tuple(kv[s] for kv in key_arrays), t[bstarts], npts, sv, rows)
+            return rows.frame()
         ts_sec = pdf["bucket"].to_numpy().astype("datetime64[s]").astype(np.int64)
         npts = pdf["n_points"].to_numpy()
         sv = pdf["sum_value"].to_numpy()
         for s, e in zip(starts, ends):
-            key_values = {k: pdf[k].iloc[s] for k in keys}
-            tier_chain_rows(key_values, ts_sec[s:e], npts[s:e], sv[s:e], rows)
-        return pd.DataFrame(rows, columns=out_cols)
+            key_values = tuple(kv[s] for kv in key_arrays)
+            tier_chain_rows(fill, key_values, ts_sec[s:e], npts[s:e], sv[s:e], rows)
+        return rows.frame()
 
     def process_partition(batches):
+        fill = _SeriesFill(*fill_args)
         carry: pd.DataFrame | None = None
         for pdf in batches:
             if carry is not None and len(carry):
@@ -443,9 +432,9 @@ def cascade_gapfill_encode_all(
             carry = pdf.iloc[first_of_last:]
             head = pdf.iloc[:first_of_last]
             if len(head):
-                yield emit_chunk(head)
+                yield emit_chunk(fill, head)
         if carry is not None and len(carry):
-            yield emit_chunk(carry)
+            yield emit_chunk(fill, carry)
 
     if from_raw:
         # count(value)/sum(value) ignore nulls in the groupBy rollup;

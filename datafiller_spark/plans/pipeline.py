@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from ..exceptions import EngineValueError
 from ..operators import cascade, encode_tier, model_gapfill, regular_grid, rollup
-from ..operators.impute import cascade_gapfill_encode_all, model_gapfill_encode
+from ..operators.impute import TIER_FREQ, cascade_gapfill_encode_all, model_gapfill_encode
 from .checkpoint import incremental_filter, read_high_water, write_high_water
 
 TIER_CHAIN = ("1m", "1h", "1d")
@@ -530,6 +530,7 @@ def run_pipeline(
                 lags=lags,
                 min_samples_train=min_samples_train,
                 interpolate_gaps_less_than=interpolate_gaps_less_than,
+                freq=TIER_FREQ[tier],
             ).cache()
             filled[tier] = fdf
             if collect_metrics:

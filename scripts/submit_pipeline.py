@@ -10,7 +10,7 @@ Usage (multi-executor cluster):
       scripts/submit_pipeline.py \
       --input  <iceberg-table-or-parquet-path> \
       --output <warehouse-path> \
-      [--resume] [--salt-buckets 16]
+      [--resume] [--salt-buckets 16] [--no-fused]
 
 The same pipeline backs the sandbox scaling evidence (bench.py runs it
 in-process at N vs 4N parallelism — thread mode local[N] or real
@@ -27,7 +27,7 @@ import sys
 import time
 
 
-def main() -> None:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="parquet path of the sequence table")
     ap.add_argument("--output", required=True, help="output warehouse dir")
@@ -42,8 +42,18 @@ def main() -> None:
         default=None,
         help="resume anchored to this snapshot id (default: current head)",
     )
-    ap.add_argument("--fused", action="store_true", default=True)
-    args = ap.parse_args()
+    ap.add_argument(
+        "--fused",
+        action=argparse.BooleanOptionalAction,
+        default=True,
+        help="one fused kernel for the whole tier chain (default); --no-fused "
+        "runs the staged writer with per-tier metrics and lineage",
+    )
+    return ap.parse_args(argv)
+
+
+def main() -> None:
+    args = parse_args()
 
     from pyspark.sql import SparkSession
 

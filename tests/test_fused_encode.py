@@ -144,3 +144,37 @@ def test_pipeline_fused_from_raw_misuse_raises(spark):
             spark, seqs, ["source"], "event_ts", "n_tok",
             fused_from_raw=True,  # without fused=True: must fail loudly
         )
+
+
+def test_staged_grid_is_the_tier_step(spark):
+    """The staged writer fills on the tier step, as the fused kernel
+    does: a 1m series observed at minutes {0, 2, 5} (irregular gaps —
+    inferring its step used to fail and leave it unfilled) and one at
+    {0, 2, 4, 6, 8} (inferring gave a 2-minute grid) both get a 1-minute
+    grid, and the staged chunks equal the fused ones byte for byte."""
+    import datetime
+
+    from datafiller_spark.plans import run_pipeline
+
+    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
+    rows = [("a", t0 + datetime.timedelta(minutes=m), 10 + m) for m in (0, 2, 5)]
+    rows += [("b", t0 + datetime.timedelta(minutes=m), 20 + 3 * m) for m in (0, 2, 4, 6, 8)]
+    raw = spark.createDataFrame(rows, "source string, event_ts timestamp, n_tok int")
+
+    def chunks(res):
+        return sorted(
+            (r.source, r.tier, r.chunk_start, r.n_points, bytes(r.payload))
+            for df in res.encoded.values()
+            for r in df.collect()
+        )
+
+    staged = chunks(run_pipeline(spark, raw, ["source"], "event_ts", "n_tok"))
+    fused = chunks(
+        run_pipeline(spark, raw, ["source"], "event_ts", "n_tok", fused=True, collect_metrics=False)
+    )
+    assert staged == fused
+    points_1m = {src: n for src, tier, _, n, _ in staged if tier == "1m"}
+    assert points_1m == {"a": 6, "b": 9}
+    ts, vals = decode_points(dict(((s, t), p) for s, t, _, _, p in staged)[("a", "1m")])
+    np.testing.assert_array_equal(np.diff(ts), 60)
+    assert not np.isnan(vals).any()

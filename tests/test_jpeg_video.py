@@ -628,3 +628,43 @@ def test_jpeg_eoi_truncated_tail_byte_still_decodes():
     assert full.endswith(b"\xff\xd9")
     truncated = full[:-2]
     assert np.array_equal(decode_jpeg(truncated), decode_jpeg(full))
+
+
+def _cext_cache_dir(monkeypatch, tmp_path):
+    """Point the cext cache at a fresh temp dir; return the path
+    ``_cache_path`` will use for its directory."""
+    import tempfile as _tf
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(_tf, "tempdir", None)  # re-read TMPDIR
+    return tmp_path / f"datafiller_cext_u{os.getuid()}"
+
+
+def test_cext_cache_refuses_symlinked_dir(monkeypatch, tmp_path):
+    """A symlink planted at the cache directory's name is refused, not
+    followed: the helper then falls back to pure Python."""
+    from datafiller_spark.kernels import cext
+
+    target = tmp_path / "elsewhere"
+    target.mkdir(mode=0o700)
+    _cext_cache_dir(monkeypatch, tmp_path).symlink_to(target)
+    with pytest.raises(OSError, match="not a plain directory"):
+        cext._cache_path()
+    monkeypatch.setitem(cext._STATE, "lib", None)
+    monkeypatch.setitem(cext._STATE, "tried", False)
+    assert cext.lib() is None
+    assert list(target.iterdir()) == []
+
+
+def test_cext_cache_refuses_group_or_other_access(monkeypatch, tmp_path):
+    """A pre-existing cache directory that group or other users can
+    read, write or enter (here 0o755) is refused; 0o700 is accepted."""
+    from datafiller_spark.kernels import cext
+
+    cache_dir = _cext_cache_dir(monkeypatch, tmp_path)
+    cache_dir.mkdir()
+    cache_dir.chmod(0o755)
+    with pytest.raises(OSError, match="group/other access"):
+        cext._cache_path()
+    cache_dir.chmod(0o700)
+    assert os.path.dirname(cext._cache_path()) == str(cache_dir)

@@ -98,3 +98,24 @@ def test_spark_submit_py_files_on_local_cluster(spark, tmp_path):
     assert t1m.count() > 0
     chunks = spark.read.parquet(os.path.join(out_dir, "chunks"))
     assert chunks.where("tier = '1d'").count() > 0
+
+
+def _submit_module():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "submit_pipeline", os.path.join(REPO, "scripts", "submit_pipeline.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_submit_fused_flag_parses_both_ways():
+    """``--fused`` stays the default; ``--no-fused`` selects the staged
+    writer (and with it ``collect_metrics``, which follows the flag)."""
+    parse = _submit_module().parse_args
+    base = ["--input", "in", "--output", "out"]
+    assert parse(base).fused is True
+    assert parse(base + ["--fused"]).fused is True
+    assert parse(base + ["--no-fused"]).fused is False
